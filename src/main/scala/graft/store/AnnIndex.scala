@@ -825,38 +825,13 @@ object AnnIndex {
     * embeddings-table scan, which is the property this query family
     * exists to prove.
     */
-  // The collected panel rows are memoized per corpus-file state (same
-  // key discipline as StoreRoot.rootForCached, including the
-  // SPARK_GRAFT_NO_ROOT_MEMO escape hatch — the memo shares rootMemo's
-  // mtime+len staleness window, so the same env knob must disable
-  // both). The map is keyed by srcFile with the observed state INSIDE
-  // the value: a regenerated corpus replaces its entry instead of
-  // accreting one per file state, so the memo is bounded by the number
-  // of distinct corpus paths, not corpus rewrites (ADVICE r14). The
-  // panel is a pure function of the immutable embeddings file, and
-  // re-collecting it was one fixed driver job on every warm serve
-  // (r13 verdict #2 — the serve rows are latency-bound, cpu/wall ≈ 2
-  // at ~1.5 s wall). Rows are cached, the local relation is rebuilt
-  // per call (cheap, session-correct).
-  private val panelMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, Array[org.apache.spark.sql.Row])]()
-
+  // panel rows memoized per corpus-file state (StoreRoot.memo): a
+  // warm serve runs no panel job
   private def queryLiterals(s: SparkSession, dir: String): DataFrame = {
     val srcFile = s"$dir/embeddings.parquet"
     val plan = Tables.embeddings(s, dir).filter(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-    val rows =
-      if (sys.env.get("SPARK_GRAFT_NO_ROOT_MEMO").contains("1"))
-        plan.collect()
-      else {
-        val p = new Path(srcFile)
-        val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-        val st = fs.getFileStatus(p)
-        val state = s"${st.getModificationTime}|${st.getLen}"
-        panelMemo.compute(srcFile, (_, prev) =>
-          if (prev != null && prev._1 == state) prev
-          else (state, plan.collect()))._2
-      }
+    val rows = StoreRoot.memo(s, s"panel.ann|$srcFile", srcFile)(plan.collect())
     s.createDataFrame(java.util.Arrays.asList(rows: _*), plan.schema)
   }
 
@@ -1289,22 +1264,6 @@ object AnnIndex {
     * measured rung (the dial's honesty: it cannot promise what the
     * index never measured).
     */
-  // Dial-manifest rows memoized per (root, dial-dir file state) — the
-  // panelMemo discipline (r13): the manifest is a tiny immutable-once-
-  // written control-plane table, and re-reading it was one fixed
-  // driver job on every warm dialed serve. Same staleness window
-  // (mtime+len of the dial dir) and the same SPARK_GRAFT_NO_ROOT_MEMO
-  // escape hatch as the other store memos.
-  private val dialMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, Seq[(Long, Double)])]()
-
-  private[graft] def dialDirState(s: SparkSession, dialDir: String): String = {
-    val p = new Path(dialDir)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val st = fs.getFileStatus(p)
-    s"${st.getModificationTime}|${fs.listStatus(p).length}"
-  }
-
   def resolveNprobe(s: SparkSession, root: String,
       targetRecall: Double): Int = {
     def readRows(): Seq[(Long, Double)] =
@@ -1312,14 +1271,8 @@ object AnnIndex {
         .orderBy(col("nprobe"))
         .select(col("nprobe"), col("mean_recall")).collect()
         .map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val dial =
-      if (sys.env.get("SPARK_GRAFT_NO_ROOT_MEMO").contains("1")) readRows()
-      else {
-        val state = dialDirState(s, s"$root/dial")
-        dialMemo.compute(s"$root/dial", (_, prev) =>
-          if (prev != null && prev._1 == state) prev
-          else (state, readRows()))._2
-      }
+    // dial-manifest rows memoized per dial-dir state (StoreRoot.memo)
+    val dial = StoreRoot.memo(s, s"dial.ann|$root", s"$root/dial")(readRows())
     require(dial.nonEmpty, s"index at $root has no dial manifest — " +
       "rebuild with writeIvfDial or serve with an explicit nprobe")
     dial.find(_._2 >= targetRecall).getOrElse(dial.last)._1.toInt

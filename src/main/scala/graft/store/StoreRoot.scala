@@ -24,74 +24,85 @@ object StoreRoot {
     new Path(s"$defaultBase/$kind-$digest")
   }
 
-  /** Process-level memo for [[rootFor]] keyed by everything in the
-    * digest EXCEPT the row count: for an immutable source file,
-    * (path, mtime, len, kind, version) determines n, so repeat serves
-    * skip the count() job entirely — the one Spark job a warm
-    * build-once/query-many serve still paid per call (r13 verdict #2:
-    * the serve rows are latency-bound, and the per-call corpus count
-    * was a fixed stage-count tax on every one of them). A corpus
-    * rewrite changes mtime/len and misses the memo, exactly like it
-    * changes [[rootFor]]'s digest.
+  /** THE store-state memo: every small value derived from on-disk
+    * store state (resolved roots, collected index headers, query
+    * panels, dial manifests, corpus max ids) is computed once per
+    * observed state of its `watched` paths and reused until that state
+    * changes. One map, keyed by a caller-namespaced `key` (`root|…`,
+    * `artifact|…`, `dial.ann|…`, …) with the observed state stored
+    * INSIDE the value, so a rewrite replaces its entry instead of
+    * accreting one per state. Query results are never memoized — only
+    * their small control-plane inputs, rebuilt per call as local
+    * relations (cheap, session-correct) — so a warm serve runs no job
+    * for them, while a commit (append, delete, compaction, corpus
+    * rewrite) that changes a watched path re-collects once.
     *
-    * Honest staleness delta vs the per-call count (review r14): the
-    * memo's key drops n, so a rewrite that preserves BOTH mtime and
-    * length (an mtime-preserving copy of an equal-length regenerated
-    * file) is served stale where the old path would re-count — but
-    * only when the regenerated corpus ALSO changed its row count;
-    * an equal-rowcount regeneration was served stale by the digest
-    * itself before the memo existed. The window this memo adds is
-    * "mtime-preserved ∧ equal-length ∧ different-rowcount", which no
-    * normal write produces (rewrites bump mtime). Set
-    * SPARK_GRAFT_NO_ROOT_MEMO=1 to force per-call counting back on.
+    * `compute` runs OUTSIDE any map lock: a `ConcurrentHashMap.compute`
+    * would hold a bin lock across a Spark job and throw `Recursive
+    * update` on a nested memo call. Two racing misses compute the same
+    * immutable value, so the race is harmless; a write landing between
+    * the state read and `compute` stores the new value under the old
+    * state, which only costs one extra recompute.
+    *
+    * Staleness window ([[stateOf]]): a file is observed as mtime+len
+    * and a directory as mtime+entry count, so what is served stale is
+    * an mtime-preserving, equal-length rewrite with a different row
+    * count (an equal-row-count one already shares [[rootFor]]'s
+    * digest). No normal write produces it: rewrites bump mtime, and
+    * every store commit adds, swaps or renames files.
     */
-  private val rootMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Path]()
+  private val memoMap =
+    new java.util.concurrent.ConcurrentHashMap[String, (String, Any)]()
 
-  def rootForCached(spark: SparkSession, srcFile: String, kind: String,
-      version: String)(n: => Long): Path = {
-    if (sys.env.get("SPARK_GRAFT_NO_ROOT_MEMO").contains("1"))
-      return rootFor(spark, srcFile, kind, n, version)
-    val src = new Path(srcFile)
-    val fs = src.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val st = fs.getFileStatus(src)
-    val key = s"$srcFile|${st.getModificationTime}|${st.getLen}|$kind|$version"
-    rootMemo.computeIfAbsent(key,
-      _ => rootFor(spark, srcFile, kind, n, version))
+  def memo[T](spark: SparkSession, key: String, watched: String*)(
+      compute: => T): T = {
+    val state = stateOf(spark, watched)
+    val prev = memoMap.get(key)
+    if (prev != null && prev._1 == state) prev._2.asInstanceOf[T]
+    else {
+      val v = compute
+      memoMap.put(key, (state, v))
+      v
+    }
   }
 
-  /** Tiny-artifact localizer (r19, the panel/dial memo discipline
-    * applied to the store MODEL artifacts): codebooks (8×16 codewords),
-    * IVF centroids (one row per coarse cell) and the summed BM25
-    * statistics (one row) are immutable-once-written index headers a
-    * few KB in size, yet every warm serve re-planned a parquet scan —
-    * and, for the stats table, a two-phase aggregate plus a broadcast
-    * build — over them: 2-3 fixed stages per serve on rows whose
-    * cpu/wall ≈ 2 says stage latency, not compute, is the cost (r18
-    * verdict #2). The rows are collected once per (path, directory
-    * mtime + entry count) — append/delete/compaction commits add or
-    * swap files, so any state change re-collects — and rebuilt as a
-    * LITERAL local relation per call (session-correct, same as the
-    * panel memos). Query results are computed per invocation; only the
-    * index header's rows are memoized. SPARK_GRAFT_NO_ROOT_MEMO=1
-    * disables this together with the other store memos.
+  /** The one file-state recipe behind [[memo]]: per path, mtime|len for
+    * a file, mtime|entry count for a directory, `absent` when missing.
     */
-  private val artifactMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, org.apache.spark.sql.types.StructType,
-      Array[org.apache.spark.sql.Row])]()
+  def stateOf(spark: SparkSession, paths: Seq[String]): String =
+    paths.map { path =>
+      val p = new Path(path)
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      if (!fs.exists(p)) "absent"
+      else {
+        val st = fs.getFileStatus(p)
+        val size = if (st.isDirectory) fs.listStatus(p).length else st.getLen
+        s"${st.getModificationTime}|$size"
+      }
+    }.mkString(";")
 
+  /** [[rootFor]] memoized on the source file's state: for an immutable
+    * source file, (path, state, kind, version) determines n, so a warm
+    * serve skips the count() job — by-name `n` runs only on a miss.
+    */
+  def rootForCached(spark: SparkSession, srcFile: String, kind: String,
+      version: String)(n: => Long): Path =
+    memo(spark, s"root|$srcFile|$kind|$version", srcFile)(
+      rootFor(spark, srcFile, kind, n, version))
+
+  /** Tiny index header (PQ codebooks, IVF centroids, summed BM25
+    * stats) collected once per store state and rebuilt per call as a
+    * LITERAL local relation: a warm serve plans no parquet scan,
+    * aggregate or broadcast build over it.
+    */
   def localizedArtifact(spark: SparkSession, path: String)(
       plan: => org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
-    if (sys.env.get("SPARK_GRAFT_NO_ROOT_MEMO").contains("1")) return plan
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val st = fs.getFileStatus(p)
-    val state = s"${st.getModificationTime}|${fs.listStatus(p).length}"
-    val hit = artifactMemo.compute(path, (_, prev) =>
-      if (prev != null && prev._1 == state) prev
-      else { val df = plan; (state, df.schema, df.collect()) })
-    spark.createDataFrame(java.util.Arrays.asList(hit._3: _*), hit._2)
+    val (schema, rows) = memo(spark, s"artifact|$path", path) {
+      val df = plan
+      (df.schema, df.collect())
+    }
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
   }
 
   /** Deterministic per-process scratch root for registered queries

@@ -196,30 +196,6 @@ object TextIndex {
       postings: DataFrame): DataFrame =
     AnnIndex.minusDeletes(spark, root, postings, "doc_id")
 
-  // Panel-terms memo (r19, the AnnIndex.panelMemo discipline): the
-  // serve's fixed driver job collected the query panel's postings rows
-  // on EVERY warm serve — and because the postings table is sorted by
-  // TERM, the doc_id < 10 filter prunes no row groups, so each collect
-  // re-read the store's largest table end to end. The panel is a pure
-  // function of the store's postings+deletes file state; the collected
-  // rows are memoized per root, invalidated on that state, with the
-  // same SPARK_GRAFT_NO_ROOT_MEMO escape hatch as the other store
-  // memos. The literal relation is rebuilt per call (cheap,
-  // session-correct); query results are still computed per invocation.
-  private val panelMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, Array[org.apache.spark.sql.Row])]()
-
-  private def lexStoreState(spark: SparkSession, root: String): String =
-    Seq("postings", "deletes").map { sub =>
-      val p = new Path(s"$root/$sub")
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(p)) s"$sub:absent"
-      else {
-        val st = fs.getFileStatus(p)
-        s"$sub:${st.getModificationTime}|${fs.listStatus(p).length}"
-      }
-    }.mkString(";")
-
   /** BM25 top-k from the persisted index: the query panel's terms come
     * from its own postings rows (doc_id < 10), candidates from the
     * postings join on term — the identical arithmetic (and literals)
@@ -248,19 +224,15 @@ object TextIndex {
     // ONE collect feeds both the literal panel relation and the term
     // literals (r14: the separate distinct().collect() was a second
     // driver job on every warm serve — pure stage-count latency), and
-    // the collected rows are memoized per root state (r19, see
-    // panelMemo above) so a warm serve runs ZERO panel jobs.
+    // the collected rows are memoized per postings+deletes state
+    // (StoreRoot.memo) so a warm serve runs ZERO panel jobs. The
+    // postings table is sorted by TERM, so the doc_id < 10 filter
+    // prunes no row group: an unmemoized collect re-reads the store's
+    // largest table end to end.
     val panelPlan = postings.filter(col("doc_id") < 10)
       .select(col("doc_id").as("query_id"), col("tok"))
-    val qtRows =
-      if (sys.env.get("SPARK_GRAFT_NO_ROOT_MEMO").contains("1"))
-        panelPlan.collect()
-      else {
-        val state = lexStoreState(spark, root)
-        panelMemo.compute(root, (_, prev) =>
-          if (prev != null && prev._1 == state) prev
-          else (state, panelPlan.collect()))._2
-      }
+    val qtRows = StoreRoot.memo(spark, s"panel.lex|$root",
+      s"$root/postings", s"$root/deletes")(panelPlan.collect())
     val qt = spark.createDataFrame(
       java.util.Arrays.asList(qtRows: _*), panelPlan.schema)
     // sorted: collect order is partition-arrival nondeterministic, and

@@ -4,7 +4,6 @@ import java.nio.file.Files
 
 import graft.Tables
 import graft.analytics.TextAnalysis
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Long-run profile of the incremental DSIR loop: N deliveries through
@@ -35,12 +34,8 @@ object LongRunDsir {
     val nBatches = args.lift(0).map(_.toInt).getOrElse(200)
     val maxSegments = args.lift(1).map(_.toInt).getOrElse(16)
     val dir = args.lift(2).getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.local(
+      Runtime.getRuntime.availableProcessors.toString).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val outDir = Files.createTempDirectory("lrd_out").toString + "/scores"

@@ -2,7 +2,6 @@ package graft.tools
 
 import graft.Tables
 import graft.store.AnnIndex
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev tool: the streaming index-append twin of `LongRunKeyedSink` —
@@ -27,12 +26,8 @@ object LongRunIndexAppend {
     // certifies periodic Compaction keeps per-batch cost flat and the
     // file census bounded instead of growing with batch count
     val compactEvery = args.lift(2).map(_.toInt).getOrElse(0)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.local(
+      Runtime.getRuntime.availableProcessors.toString).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val emb = Tables.embeddings(spark, dir)

@@ -6,7 +6,6 @@ import graft.streaming.{KeyIndex, Streams}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 
-import org.apache.spark.sql.SparkSession
 
 /** Long-run profile of the KEYED transactional sink
   * (`Streams.commitBatch(keyedDedup = true)`) — the `LongRunSink` twin
@@ -48,12 +47,8 @@ object LongRunKeyedSink {
   def main(args: Array[String]): Unit = {
     val nBatches = args.lift(0).map(_.toInt).getOrElse(500)
     val maxSegments = args.lift(1).map(_.toInt).getOrElse(16)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.local(
+      Runtime.getRuntime.availableProcessors.toString).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val outDir = Files.createTempDirectory("lrk_out").toString + "/table"

@@ -32,12 +32,8 @@ object LongRunLexAppend {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val batches = args.lift(1).map(_.toInt).getOrElse(60)
     val foldEvery = args.lift(2).map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.local(
+      Runtime.getRuntime.availableProcessors.toString).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val docs = Tables.documents(spark, dir)

@@ -4,7 +4,6 @@ import graft.Tables
 import graft.similarity.Similarity
 import graft.store.{AnnIndex, BatchCommit, Maintenance, StoreRoot, TextIndex}
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev tool: the POLICY-DRIVEN maintenance layer under sustained load —
@@ -39,12 +38,8 @@ object LongRunMaintenance {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val iters = args.lift(1).map(_.toInt).getOrElse(12)
     val segmentBound = 8
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.local(
+      Runtime.getRuntime.availableProcessors.toString).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val fs = new Path("/").getFileSystem(spark.sparkContext.hadoopConfiguration)
 

@@ -4,7 +4,6 @@ import java.nio.file.Files
 
 import graft.Tables
 import graft.dedup.Dedup
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Long-run profile of the incremental dedup sink loop: N deliveries
@@ -36,12 +35,8 @@ object LongRunSink {
     val nBatches = args.lift(0).map(_.toInt).getOrElse(500)
     val maxSegments = args.lift(1).map(_.toInt).getOrElse(16)
     val dir = args.lift(2).getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.local(
+      Runtime.getRuntime.availableProcessors.toString).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val outDir = Files.createTempDirectory("lr_out").toString + "/corpus"

@@ -2,7 +2,6 @@ package graft.tools
 
 import graft.Tables
 import graft.similarity.{LshParams, Similarity}
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: LSH-vs-exact timing at multiple corpus sizes, so the
   * derive curve's scaling claim rests on measured points instead of an
@@ -20,12 +19,8 @@ object ScaleCurve {
     // "exactruns" | "dsir"; no filter runs all sections
     val only = args.lift(1)
     def section(name: String): Boolean = only.forall(_ == name)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.local(
+      Runtime.getRuntime.availableProcessors.toString).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     def noop(df: org.apache.spark.sql.DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()

@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.similarity.Similarity
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev harness for the mega-cell split differential: writes the
@@ -18,13 +17,8 @@ object SkewSemantic {
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("/tmp/skew_semantic")
     val n = if (args.length > 1) args(1).toLong else 2048L
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.local(
+      Runtime.getRuntime.availableProcessors.toString).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val emb = Similarity.skewedEmbeddings(spark, n)
     emb.coalesce(1).write.mode("overwrite").parquet(s"$out/embeddings")

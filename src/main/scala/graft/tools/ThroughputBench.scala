@@ -28,12 +28,8 @@ object ThroughputBench {
     val nDevices = args.lift(0).map(_.toInt).getOrElse(200)
     val nPerDevice = args.lift(1).map(_.toInt).getOrElse(500)
     val nBatches = args.lift(2).map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.local(
+      Runtime.getRuntime.availableProcessors.toString).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val total = nDevices.toLong * nPerDevice

@@ -175,6 +175,27 @@ class MultimodalSpec extends SparkSpec {
       r.getAs[Boolean]("luma_in_band")))
   }
 
+  test("profiled-range guards re-check a corpus rewritten in place") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("mm_guard").toString
+    def writeCorpus(ids: Seq[Long]): Unit =
+      ids.toDF("doc_id").coalesce(1).write.mode("overwrite")
+        .parquet(s"$dir/documents.parquet")
+    writeCorpus(Seq(0L, 1L, 2L))
+    assert(Multimodal.mmPhashJpegSurvival(spark, dir).count() == 3)
+    // same path, new max beyond every profiled range
+    writeCorpus(Seq(0L, 1L + Seq(Multimodal.PhashJpegProfiledMaxId,
+      Multimodal.VideoJpegProfiledMaxId, Multimodal.AudioUlawProfiledMaxId).max))
+    val audits = Seq[() => Any](
+      () => Multimodal.mmPhashJpegSurvival(spark, dir),
+      () => Multimodal.mmVideoJpegSurvival(spark, dir),
+      () => Multimodal.mmAudioUlawSurvival(spark, dir))
+    audits.foreach { audit =>
+      val e = intercept[IllegalArgumentException](audit())
+      assert(e.getMessage.contains("profiled for"))
+    }
+  }
+
   private implicit class TupleOps(rows: Array[(Long, Long, Int, Int, Double)]) {
     def toMap2: Map[Long, (Long, Int, Int, Double)] =
       rows.map(t => t._1 -> ((t._2, t._3, t._4, t._5))).toMap
